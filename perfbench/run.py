@@ -7,9 +7,9 @@ and stream, with output checks and per-layer Spark counters.
 Run from the root of a checkout.  Each run builds its input from the seed,
 starts one Spark session sized to the host (``local[nproc]``), pays one
 untimed warm-up pass over the same input (counted in ``setup_s``), then
-repeats the workload for ``--seconds`` in a closed loop: one driver, one job
-at a time.  Every timed pass's output is scored against the generator's
-truth clusters.
+makes as many timed passes as fit ``--seconds`` at the workload's nominal
+pass time, in a closed loop: one driver, one job at a time.  Every timed
+pass's output is scored against the generator's truth clusters.
 
 ``--trace 0`` reports the end-to-end metrics; ``--trace 1`` runs one untraced
 pass, then traced passes, and reports the per-layer metrics read back from
@@ -69,7 +69,12 @@ def steal_share(h0: dict, h1: dict) -> float:
 
 class RssSampler:
     """Peak resident memory of one process tree (the driver JVM and the
-    Python workers it forks), sampled from ``/proc``."""
+    Python workers it forks), sampled from ``/proc``.
+
+    A descendant that still runs the root's executable is skipped: the JVM
+    forks short-lived helpers (Hadoop's local file system shells out to
+    ``chmod`` and ``ls``), and until such a child execs it shares the JVM's
+    pages, so counting it would add the whole JVM a second time."""
 
     def __init__(self, root_pid: int, period_s: float = 0.2):
         self.root_pid = root_pid
@@ -78,6 +83,7 @@ class RssSampler:
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
         self._page = os.sysconf("SC_PAGE_SIZE")
+        self._root_exe = os.readlink(f"/proc/{root_pid}/exe")
 
     def __enter__(self):
         self._thread.start()
@@ -103,6 +109,8 @@ class RssSampler:
             pid = todo.pop()
             todo.extend(children.get(pid, []))
             try:
+                if pid != self.root_pid and os.readlink(f"/proc/{pid}/exe") == self._root_exe:
+                    continue
                 with open(f"/proc/{pid}/statm") as f:
                     total += int(f.read().split()[1]) * self._page
             except (OSError, IndexError, ValueError):
@@ -290,6 +298,17 @@ class StreamDriver:
 
 DRIVERS = {"batch_boilerplate": BatchDriver, "stream_near": StreamDriver}
 
+# Seconds one warm timed pass takes on a 4-core host.  A run makes
+# floor(--seconds / PASS_S) timed passes, at least one, so that every run of
+# a workload makes the same passes whatever the host's speed: the JIT is
+# still warming over the first passes, so a time box would let a slow
+# spell change the pass count, and the median with it.
+PASS_S = {"batch_boilerplate": 15.0, "stream_near": 8.0}
+
+
+def pass_count(workload: str, seconds: float) -> int:
+    return max(1, int(seconds // PASS_S[workload]))
+
 
 def units_of(inp) -> int:
     """Attempts one timed pass stands for: micro-batches for the stream, one
@@ -318,12 +337,10 @@ class Watchdog:
         self.timer.cancel()
 
 
-def timed_passes(driver, inp, seconds: float, result: dict, keep: bool = False) -> None:
-    """Closed loop: start another pass only while it is expected to finish
-    within ``seconds`` and the run's budget; always at least one."""
-    start = time.perf_counter()
-    last = 0.0
-    while True:
+def timed_passes(driver, inp, passes: int, result: dict, keep: bool = False) -> None:
+    """Closed loop of ``passes`` passes, one after another.  Stops early after
+    a failed pass, or when the next pass would overrun the run's budget."""
+    for _ in range(passes):
         n_units = units_of(inp)
         result["attempted"] += n_units
         e0 = time.time()
@@ -344,8 +361,7 @@ def timed_passes(driver, inp, seconds: float, result: dict, keep: bool = False) 
         result["walls"].append(wall)
         result["windows"].append((e0, e0 + wall))
         result["scores"].append(s)
-        last = wall
-        if time.perf_counter() - start + last > seconds or last > time_left():
+        if wall > time_left():
             break
 
 
@@ -462,7 +478,7 @@ def run(args, work: str) -> int:
         else:
             driver = make_driver("runs")
             with RssSampler(gateway.proc.pid) as rss:
-                timed_passes(driver, inp, args.seconds, result)
+                timed_passes(driver, inp, pass_count(args.workload, args.seconds), result)
             metrics = end_to_end(driver, inp, result, setup_s, rss.peak_bytes)
     finally:
         spark.stop()
@@ -509,18 +525,18 @@ def end_to_end(driver, inp, result, setup_s: float, peak_rss: int) -> dict:
 
 def traced(spark, make_driver, inp, args, result, start_s: float, setup_window) -> dict:
     """One untraced pass (the overhead baseline), then traced passes for the
-    rest of ``--seconds``; returns the per-layer metrics."""
+    rest of the run's pass count; returns the per-layer metrics."""
     from layertrace import Tracer, per_layer
 
     tracer = Tracer(spark)
     base = {"attempted": 0, "failed": 0, "errors": [], "walls": [], "windows": [], "scores": []}
-    timed_passes(make_driver("base"), inp, 0.0, base)
+    timed_passes(make_driver("base"), inp, 1, base)
     result["errors"].extend(base["errors"])
     driver = make_driver("traced")
     tracer.install()
     t0 = time.time()
     try:
-        timed_passes(driver, inp, max(0.0, args.seconds - sum(base["walls"])), result, keep=True)
+        timed_passes(driver, inp, max(1, pass_count(args.workload, args.seconds) - 1), result, keep=True)
     finally:
         tracer.uninstall()
     t1 = time.time()
