@@ -15,7 +15,12 @@ probe with every source, track statistics. The Spark translation:
   (copy.c:28-67);
 - per-stage metrics rows (rows out, wall seconds) and per-partition lineage
   rows generalize ``stats_t`` (include/cpdd.h:61-69) and feed the
-  scaling-efficiency benches.
+  scaling-efficiency benches. Like ``stats_t`` they are counted in driver
+  memory as each stage commits and reported once per run
+  (``print_statistics``, copy.c:131-191): one append to ``metrics`` and one
+  to ``lineage`` when ``run`` returns OR raises. A hard kill of the driver
+  loses that run's rows but never a committed stage, and a resumed run
+  records only the stages it recomputes.
 
 Stage DAG::
 
@@ -80,31 +85,57 @@ class DedupPipeline:
         self.run_id = uuid.uuid4().hex[:12]
         self.stage_log: list[tuple[str, str]] = []  # (stage, 'computed'|'resumed')
         self._dirty = False  # an upstream stage recomputed -> downstream stale
+        # computed stages' rows, pending until run() flushes them
+        self._metrics_rows: list[tuple] = []
+        self._lineage_rows: list[tuple] = []
 
     # ---- bookkeeping ----------------------------------------------------
 
-    def _record(self, stage: str, t0: float) -> None:
-        """Append metrics (stage totals) + lineage (per-partition rows) —
-        stats_t generalized (include/cpdd.h:61-69, increments copy.c:267-333).
-        """
-        lineage = (
-            self.io.read(stage)
-            .groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .withColumn("run_id", F.lit(self.run_id))
-            .withColumn("stage", F.lit(stage))
-            .select("run_id", "stage", "partition_id", "rows")
+    def _record(self, stage: str, df: DataFrame, t0: float, t1: float) -> None:
+        """Count a committed stage into this run's pending metrics + lineage
+        rows — stats_t generalized (include/cpdd.h:61-69, increments
+        copy.c:267-333). One Spark job: the per-partition counts of the
+        read-back table ARE the lineage rows, and their sum is the metrics
+        row. Nothing is written here: :meth:`run` flushes every pending row
+        in one append per table when it returns or raises, so a hard kill
+        loses this run's rows but never the committed stage."""
+        counts = (
+            df.groupBy(F.spark_partition_id().alias("partition_id"))
+            .count()
+            .collect()
         )
-        # run_id partitioning: appends only ever CREATE a new partition
-        # directory (never touch prior runs' files), and reading one run's
-        # rows partition-prunes every other run
-        self.io.append(lineage, "lineage", partition_by=["run_id"])
-        n = lineage.agg(F.sum("rows")).collect()[0][0] or 0
-        metrics = self.spark.createDataFrame(
-            [(self.run_id, stage, int(n), float(t0), time.time())],
-            "run_id string, stage string, rows long, t_start double, t_end double",
-        ).withColumn("seconds", F.col("t_end") - F.col("t_start"))
-        self.io.append(metrics, "metrics", partition_by=["run_id"])
+        self._lineage_rows.extend(
+            (self.run_id, stage, r["partition_id"], r["count"]) for r in counts
+        )
+        n = sum(r["count"] for r in counts)
+        self._metrics_rows.append((self.run_id, stage, n, t0, t1, t1 - t0))
+
+    def _flush(self) -> None:
+        """Write the pending rows: one append per table, none if no stage was
+        computed. run_id partitioning: appends only ever CREATE a new
+        partition directory (never touch prior runs' files), and reading one
+        run's rows partition-prunes every other run."""
+        if not self._metrics_rows:
+            return
+        lineage, self._lineage_rows = self._lineage_rows, []
+        metrics, self._metrics_rows = self._metrics_rows, []
+        self.io.append(
+            self.spark.createDataFrame(
+                lineage,
+                "run_id string, stage string, partition_id int, rows long",
+            ),
+            "lineage",
+            partition_by=["run_id"],
+        )
+        self.io.append(
+            self.spark.createDataFrame(
+                metrics,
+                "run_id string, stage string, rows long, t_start double,"
+                " t_end double, seconds double",
+            ),
+            "metrics",
+            partition_by=["run_id"],
+        )
 
     def _stage(
         self,
@@ -123,9 +154,11 @@ class DedupPipeline:
         self._dirty = True
         t0 = time.time()
         self.io.write(compute(), name, partition_by=partition_by)
-        self._record(name, t0)
+        t1 = time.time()
+        df = self.io.read(name)
+        self._record(name, df, t0, t1)
         self.stage_log.append((name, "computed"))
-        return self.io.read(name)
+        return df
 
     # ---- the pipeline ----------------------------------------------------
 
@@ -140,6 +173,13 @@ class DedupPipeline:
         """
         if link_mode not in ("edges", "materialize"):
             raise ValueError(f"link_mode must be 'edges' or 'materialize', got {link_mode!r}")
+        # a raising stage still reports the stages that committed before it
+        try:
+            return self._run(turns, resume, link_mode)
+        finally:
+            self._flush()
+
+    def _run(self, turns: DataFrame, resume: bool, link_mode: str) -> DataFrame:
         cfg = self.cfg
 
         docs = self._stage("documents", lambda: assemble_documents(turns), resume)
@@ -168,16 +208,17 @@ class DedupPipeline:
         # no text joins, no Python workers; verify_pairs_sets docstring).
         # Band generation reads only (conv_id, n_shingles, minhash): the
         # set column is pruned at that scan.
-        sig_compute = lambda: compute_signatures(reps, cfg, with_sets=True)  # noqa: E731
-        sigs = self._stage("signatures", sig_compute, resume)
+        sigs = self._stage(
+            "signatures",
+            lambda: compute_signatures(reps, cfg, with_sets=True),
+            resume,
+        )
         if "shingles" not in sigs.columns:
-            # a committed signatures table from a pre-with_sets run lacks
-            # the set column the verify stage reads: recompute instead of
-            # failing with an unresolved-column error (downstream stages go
-            # dirty with it, as for any recompute)
-            self.stage_log.pop()
-            self._dirty = True
-            sigs = self._stage("signatures", sig_compute, resume=False)
+            raise ValueError(
+                f"committed 'signatures' table under {self.io.root!r} has no"
+                " 'shingles' column (written before signatures carried shingle"
+                " sets); rerun with resume=False or use a fresh workdir"
+            )
         verified = self._stage(
             "verified_pairs",
             lambda: verify_pairs_sets(

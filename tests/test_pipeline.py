@@ -79,9 +79,38 @@ def test_resume_recomputes_killed_stage(spark, turns_df, workdir):
     assert c1 == c2
 
 
-def test_metrics_and_lineage_written(spark, turns_df, workdir):
+def _lineage_totals(io, run_id):
+    return {
+        r["stage"]: r["total"]
+        for r in io.read("lineage")
+        .filter(f"run_id = '{run_id}'")
+        .groupBy("stage")
+        .agg({"rows": "sum"})
+        .withColumnRenamed("sum(rows)", "total")
+        .collect()
+    }
+
+
+def test_metrics_and_lineage_written(spark, turns_df, workdir, monkeypatch):
+    """A fresh run appends to metrics and to lineage exactly once each, and
+    every computed stage's lineage rows sum to its committed row count; a
+    fully resumed rerun appends nothing."""
+    from collections import Counter
+
+    from cpdd_spark.io import TableIO
+
+    appends = Counter()
+    orig = TableIO.append
+
+    def spy(self, df, name, *args, **kwargs):
+        appends[name] += 1
+        return orig(self, df, name, *args, **kwargs)
+
+    monkeypatch.setattr(TableIO, "append", spy)
+
     pipe = DedupPipeline(spark, workdir, CFG)
     pipe.run(turns_df)
+    assert appends == Counter({"metrics": 1, "lineage": 1})
     metrics = pipe.io.read("metrics").collect()
     stages = {r["stage"] for r in metrics}
     assert {"documents", "exact_clusters", "signatures", "verified_pairs",
@@ -89,13 +118,17 @@ def test_metrics_and_lineage_written(spark, turns_df, workdir):
     assert all(r["seconds"] >= 0 for r in metrics)
     lineage = pipe.io.read("lineage")
     assert lineage.filter("stage = 'documents'").count() >= 1
-    # lineage row counts sum to stage totals
-    by_stage = {
-        r["stage"]: r["total"]
-        for r in lineage.groupBy("stage").sum("rows").withColumnRenamed("sum(rows)", "total").collect()
-    }
+    # lineage row counts sum to stage totals and to the committed tables
+    by_stage = _lineage_totals(pipe.io, pipe.run_id)
     for r in metrics:
         assert by_stage[r["stage"]] == r["rows"]
+        assert r["rows"] == pipe.io.read(r["stage"]).count(), r["stage"]
+
+    appends.clear()
+    rerun = DedupPipeline(spark, workdir, CFG)
+    rerun.run(turns_df)
+    assert all(how == "resumed" for _, how in rerun.stage_log), rerun.stage_log
+    assert not appends
 
 
 def test_pipeline_partitioned_output_layout(spark, turns_df, workdir):
@@ -134,15 +167,16 @@ def test_pipeline_partitioned_output_layout(spark, turns_df, workdir):
     assert all(how == "resumed" for _, how in pipe2.stage_log), pipe2.stage_log
 
 
-def test_resume_with_legacy_signatures_schema(spark, turns_df, workdir):
+def test_resume_refuses_legacy_signatures_schema(spark, turns_df, workdir):
     """A committed signatures table from a pre-with_sets run (no shingles
-    column) must trigger a recompute on resume, not an unresolved-column
-    failure in the verify stage."""
+    column) is refused on resume with an error that names the table and
+    the fix — not migrated, and not an unresolved-column failure in the
+    verify stage."""
     import os
     import shutil
 
     p1 = DedupPipeline(spark, workdir, CFG)
-    c1 = {(r["conv_id"], r["cluster_id"]) for r in p1.run(turns_df).collect()}
+    p1.run(turns_df)
 
     # rewrite the committed signatures table WITHOUT the set column
     legacy = p1.io.read("signatures").drop("shingles").localCheckpoint(eager=True)
@@ -152,11 +186,43 @@ def test_resume_with_legacy_signatures_schema(spark, turns_df, workdir):
     assert os.path.isfile(os.path.join(path, "_SUCCESS"))
 
     p2 = DedupPipeline(spark, workdir, CFG)
-    c2 = {(r["conv_id"], r["cluster_id"]) for r in p2.run(turns_df).collect()}
-    log = dict(p2.stage_log)
-    assert log["signatures"] == "computed"  # recomputed, not resumed
-    assert log["verified_pairs"] == "computed"  # stale cascade
-    assert c1 == c2
+    with pytest.raises(ValueError, match="'signatures'") as err:
+        p2.run(turns_df)
+    assert "resume=False" in str(err.value)
+    assert "fresh workdir" in str(err.value)
+    assert dict(p2.stage_log)["signatures"] == "resumed"
+    assert "verified_pairs" not in dict(p2.stage_log)
+
+    # the documented fix: a non-resuming run recomputes and succeeds
+    p3 = DedupPipeline(spark, workdir, CFG)
+    p3.run(turns_df, resume=False)
+    assert "shingles" in p3.io.read("signatures").columns
+
+
+def test_failed_stage_flushes_committed_stages(spark, turns_df, workdir, monkeypatch):
+    """A stage that raises mid-run: the error propagates, and metrics +
+    lineage still hold rows for exactly the stages committed before it
+    (a crash between a stage write and its bookkeeping loses no row of a
+    committed stage)."""
+    import cpdd_spark.pipeline as pipeline_mod
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("substring tier failed")
+
+    monkeypatch.setattr(pipeline_mod, "substring_pairs", boom)
+    pipe = DedupPipeline(spark, workdir, CFG)
+    with pytest.raises(RuntimeError, match="substring tier failed"):
+        pipe.run(turns_df)
+
+    committed = ["documents", "exact_clusters", "signatures", "verified_pairs"]
+    assert [s for s, _ in pipe.stage_log] == committed
+    assert not pipe.io.exists("substring_pairs")
+    metrics = {
+        r["stage"]: r["rows"]
+        for r in pipe.io.read("metrics").filter(f"run_id = '{pipe.run_id}'").collect()
+    }
+    assert sorted(metrics) == sorted(committed)
+    assert _lineage_totals(pipe.io, pipe.run_id) == metrics
 
 
 def test_pipeline_fingerprint_exact_verify(spark, turns_df, workdir):
